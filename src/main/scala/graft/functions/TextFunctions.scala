@@ -79,10 +79,10 @@ object TextFunctions {
     * (readme.md:43-52,94-103): named-group regex → (city, state, postcode).
     * Returns the three captures; empty string when a group is absent.
     */
-  private val mergedPat = "(\\w+)?,? ?([A-Z][A-Z]) (\\d{5})"
-  def mergedCity(c: Column): Column = regexp_extract(c, mergedPat, 1)
-  def mergedState(c: Column): Column = regexp_extract(c, mergedPat, 2)
-  def mergedPostcode(c: Column): Column = regexp_extract(c, mergedPat, 3)
+  private[graft] val mergedPattern = "(\\w+)?,? ?([A-Z][A-Z]) (\\d{5})"
+  def mergedCity(c: Column): Column = regexp_extract(c, mergedPattern, 1)
+  def mergedState(c: Column): Column = regexp_extract(c, mergedPattern, 2)
+  def mergedPostcode(c: Column): Column = regexp_extract(c, mergedPattern, 3)
 
   // ---------------------------------------------------------------------
   // Part 2 — training-data pipeline text analysis
